@@ -17,6 +17,20 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(autouse=True)
+def _session_conf_unchanged(request):
+    """No test, and no library call under test, may leave a session conf
+    change behind: a plan that needs a setting scopes it to itself, never
+    to the shared session (SCC runs jobs on a thread pool)."""
+    if "spark" not in request.fixturenames:
+        yield
+        return
+    s = request.getfixturevalue("spark")
+    before = s.conf.getAll
+    yield
+    assert s.conf.getAll == before
+
+
 @pytest.fixture()
 def tmp_run_dir(tmp_path):
     return str(tmp_path / "run")

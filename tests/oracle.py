@@ -7,6 +7,8 @@ these)."""
 
 from __future__ import annotations
 
+import hashlib
+import math
 from collections import Counter, defaultdict
 
 import numpy as np
@@ -203,3 +205,39 @@ def harmonic_oracle(edges: np.ndarray, n: int, t_max: int) -> dict[int, float]:
             if 0 < dist <= t_max:
                 out[x] = out.get(x, 0.0) + 1.0 / dist
     return {x: round(v, 9) for x, v in out.items()}
+
+
+def hll_registers_oracle(edges, nodes, t: int, log2m: int = 6) -> dict[int, list[int]]:
+    """HyperBall registers after ``t`` synchronous max-merge rounds, m =
+    2^log2m per node.  Node x's own register: h = first 48 bits of
+    md5(str(x)), j = h & (m-1), w = h >> log2m, rho = number of leading
+    zeros of w in (48 - log2m) bits, plus one.  Each round x takes the
+    register-wise max over itself and its successors."""
+    m = 1 << log2m
+    w_bits = 48 - log2m
+    regs = {}
+    for x in nodes:
+        r = [0] * m
+        h = int(hashlib.md5(str(x).encode()).hexdigest()[:12], 16)
+        w = h >> log2m
+        r[h & (m - 1)] = w_bits - w.bit_length() + 1
+        regs[x] = r
+    arcs = sorted(set(map(tuple, edges)))
+    for _ in range(t):
+        new = {x: list(r) for x, r in regs.items()}
+        for s, d in arcs:
+            new[s] = [max(a, b) for a, b in zip(new[s], regs[d])]
+        regs = new
+    return regs
+
+
+def hll_estimate(regs: list[int]) -> float:
+    """HyperLogLog cardinality of one register vector (Flajolet et al.
+    2007), with the small-range (linear counting) correction."""
+    m = len(regs)
+    alpha = {16: 0.673, 32: 0.697, 64: 0.709}.get(m, 0.7213 / (1.0 + 1.079 / m))
+    raw = alpha * m * m / sum(2.0 ** -r for r in regs)
+    zeros = regs.count(0)
+    if raw <= 2.5 * m and zeros > 0:
+        return m * math.log(m / zeros)
+    return raw

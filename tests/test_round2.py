@@ -4,7 +4,6 @@ BFS parents, k-means IVF recall, PageRank co-partition parity."""
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 from functools import cmp_to_key
@@ -20,8 +19,6 @@ from webgraph_big_spark.graph import Graph
 from webgraph_big_spark.algorithms.bfs import bfs_distances
 from webgraph_big_spark.algorithms.components import connected_components
 from webgraph_big_spark.algorithms.hyperball import (
-    P,
-    W_BITS,
     hyperball,
     hyperball_centralities,
     hyperball_registers,
@@ -33,7 +30,7 @@ from webgraph_big_spark.algorithms.scc import (
     strongly_connected_components_fwbw,
 )
 from webgraph_big_spark.datapipe import similarity as ds
-from tests.oracle import harmonic_oracle, scc_oracle
+from tests.oracle import harmonic_oracle, hll_registers_oracle, scc_oracle
 
 from webgraph_big_spark.algorithms.centrality import reachable_counts
 
@@ -47,30 +44,6 @@ def _g(spark, edges, n=None, dense=True):
 # ---------------------------------------------------------------------------
 
 
-def _h48(s) -> int:
-    return int(hashlib.md5(str(s).encode()).hexdigest()[:12], 16)
-
-
-def _hll_regs_oracle(edges, nodes, t):
-    regs = {}
-    for x in nodes:
-        r = [0] * P
-        h = _h48(x)
-        j = h & (P - 1)
-        w = h >> 6
-        r[j] = (W_BITS + 1) if w == 0 else (W_BITS - w.bit_length() + 1)
-        regs[x] = r
-    dedup = sorted(set(map(tuple, edges)))
-    for _ in range(t):
-        new = {x: list(r) for x, r in regs.items()}
-        for s, d in dedup:
-            for k in range(P):
-                if regs[d][k] > new[s][k]:
-                    new[s][k] = regs[d][k]
-        regs = new
-    return regs
-
-
 def test_hyperball_registers_match_oracle(spark):
     edges = synth.erdos_renyi(30, 0.1, seed=7)
     g = _g(spark, edges, 30)
@@ -78,7 +51,7 @@ def test_hyperball_registers_match_oracle(spark):
         r["id"]: [int(v) for v in r["regs_csv"].split(",")]
         for r in hyperball_registers(g, 3).collect()
     }
-    want = _hll_regs_oracle(edges, range(30), 3)
+    want = hll_registers_oracle(edges, range(30), 3)
     assert got == want
 
 
@@ -92,7 +65,7 @@ def test_hyperball_hub_merge(spark):
         r["id"]: [int(v) for v in r["regs_csv"].split(",")]
         for r in hyperball_registers(g, 1).collect()
     }
-    want = _hll_regs_oracle(edges, range(2001), 1)
+    want = hll_registers_oracle(edges, range(2001), 1)
     assert got == want
 
 
@@ -105,7 +78,7 @@ def test_hyperball_systolic_converges_to_fixpoint(spark):
         r["id"]: [int(v) for v in r["regs_csv"].split(",")]
         for r in hyperball_registers(g, 50).collect()
     }
-    want = _hll_regs_oracle(edges, range(13), 13)
+    want = hll_registers_oracle(edges, range(13), 13)
     assert got == want
 
 

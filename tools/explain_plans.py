@@ -142,30 +142,26 @@ def main() -> None:
     )
 
     # 7. HyperBall merge round (production loop shape): edges cached
-    # hash-partitioned by dst, systolic double join, 64 built-in max aggs
-    from webgraph_big_spark.algorithms.hyperball import _RCOLS, _init_state
+    # hash-partitioned by dst, systolic join, 8 field-max aggs per slot
+    from webgraph_big_spark.algorithms.hyperball import K, LOG2M, _field, _packed_init
+    from webgraph_big_spark.graph import co_partitioned
 
-    state = _init_state(g1).localCheckpoint(eager=True)
-    edges_hb = g1.edges.select("src", "dst").distinct().repartition(8, "dst").cache()
-    edges_hb.count()
-    changed = state.select("id")
-    msgs = (
-        edges_hb.join(
-            changed.withColumnRenamed("id", "dst").hint("shuffle_hash"), "dst"
-        )
-        .join(state.selectExpr("id AS dst", *_RCOLS).hint("shuffle_hash"), "dst")
-        .selectExpr("src AS id", *_RCOLS)
+    state = _packed_init(g1, LOG2M).localCheckpoint(eager=True)
+    edges_hb = co_partitioned(g1.edges.select("src", "dst"), "dst", num_partitions=8)
+    merged = (
+        edges_hb.join(state.withColumnRenamed("id", "dst").hint("shuffle_hash"), "dst")
+        .groupBy(F.col("src").alias("id"), "slot")
+        .agg(*[F.expr(f"max({_field('packed', j)})").alias(f"_f{j}") for j in range(K)])
     )
-    merged = msgs.groupBy("id").agg(*[F.max(c).alias(c) for c in _RCOLS])
     sections.append(
         (
-            "HyperBall merge round (co-partitioned edges)",
+            "HyperBall merge round (co-partitioned edges, packed registers)",
             "Expect the edge side read from InMemoryTableScan with NO Exchange "
             "above it (the cache preserves the dst hash partitioning — only the "
-            "frontier and state rows exchange per round), then HashAggregate "
-            "partial/final around ONE id shuffle for the register max-merge "
-            "(map-side combine collapses hub fan-in) and zero Python operators — "
-            "no ArrowEvalPython, no FlatMapGroupsInPandas.",
+            "frontier rows exchange per round), then HashAggregate "
+            "partial/final around ONE (id, slot) shuffle for the 8 field "
+            "max-merges (map-side combine collapses hub fan-in) and zero "
+            "Python operators — no ArrowEvalPython, no FlatMapGroupsInPandas.",
             merged,
         )
     )
@@ -175,8 +171,6 @@ def main() -> None:
     # 8-10. the round-4 consistency fix: WCC / label-prop / BFS rounds on
     # the SAME co-partitioned recipe as PageRank/HyperBall (one shared
     # helper, graph.py:co_partitioned) — state/frontier moves, edges don't
-    from webgraph_big_spark.graph import co_partitioned
-
     edges_cc = co_partitioned(g1.edges.select("src", "dst"), "src", num_partitions=8)
     cc_state = (
         g1.nodes().select("id", F.col("id").alias("comp")).localCheckpoint(eager=True)

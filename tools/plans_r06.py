@@ -172,57 +172,28 @@ def main() -> None:
     emit("bfs_full_g1", [("edge prep", bfs_prep), ("one level expansion", level)])
     edges_bfs.unpersist()
 
-    # ---- hyperball: edge prep + one merge round ----
-    import importlib; hb = importlib.import_module("webgraph_big_spark.algorithms.hyperball")
-
-    c = hb._cfg(hb.LOG2M)
-    state = hb._with_est(hb._init_state(g1), c).localCheckpoint(eager=True)
-    hb_prep = g1.edges.select("src", "dst")
-    if TAG == "before":
-        hb_prep = hb_prep.distinct()
-    if TAG == "after":
-        # hyperball() now runs the PACKED engine — capture its round
-        hp = importlib.import_module("webgraph_big_spark.algorithms.hyperball_packed")
-        pstate = hp._packed_init(g1, 6).localCheckpoint(eager=True)
-        pedges = co_partitioned(hb_prep, "dst")
-        pmax = [F.expr(f"max({hp._field('packed', j)})").alias(f"_f{j}") for j in range(hp.K)]
-        pmsgs = (
-            pedges.join(pstate.withColumnRenamed("id", "dst").hint("shuffle_hash"), "dst")
-            .groupBy(F.col("src").alias("id"), "slot").agg(*pmax)
-            .selectExpr("id", "slot", f"{hp._repack([f'_f{j}' for j in range(hp.K)])} AS mpacked")
-        )
-        pmerged = pstate.join(pmsgs.hint("shuffle_hash"), ["id", "slot"], "full").selectExpr(
-            "id", "slot", "coalesce(packed, CAST(0 AS BIGINT)) AS old_packed",
-            f"{hp._greatest_packed('coalesce(packed, CAST(0 AS BIGINT))', 'coalesce(mpacked, CAST(0 AS BIGINT))')} AS packed")
-        emit("hyperball_t2_g1", [
-            ("edge prep (no distinct: max-merge idempotent)", hb_prep),
-            ("one packed merge round (O(1) plan width)", pmerged),
-        ])
-        pedges.unpersist()
-        return_early = True
-    else:
-        return_early = False
-    edges_hb = co_partitioned(hb_prep, "dst")
-    changed = state.select("id")
-    msgs = (
-        edges_hb.join(changed.withColumnRenamed("id", "dst").hint("shuffle_hash"), "dst")
-        .join(state.selectExpr("id AS dst", *c.rcols).hint("shuffle_hash"), "dst")
-        .selectExpr("src AS id", *c.rcols)
+    # ---- hyperball: edge prep + one packed merge round ----
+    from webgraph_big_spark.algorithms.hyperball import (
+        K, LOG2M, _field, _greatest_packed, _packed_init, _repack,
     )
-    gathered = msgs.groupBy("id").agg(*[F.expr(f"max(r{k})").alias(f"m{k}") for k in range(c.p)])
-    old_named = state.selectExpr("id", *[f"r{k} AS o{k}" for k in range(c.p)], "est AS old_est")
-    chg_expr = hb._balanced_expr([f"coalesce(m{k}, 0) > o{k}" for k in range(c.p)], "OR")
-    merged_exprs = [f"greatest(o{k}, coalesce(m{k}, 0)) AS r{k}" for k in range(c.p)]
-    if TAG == "before":
-        touched = gathered.join(old_named, "id").selectExpr(
-            "id", *merged_exprs, "old_est", f"({chg_expr}) AS _chg")
-    else:
-        touched = old_named.join(gathered.hint("shuffle_hash"), "id", "left").selectExpr(
-            "id", *merged_exprs, "old_est", f"({chg_expr}) AS _chg")
-    touched = hb._with_est(touched, c)
-    if not return_early:
-        emit("hyperball_t2_g1", [("edge prep", hb_prep), ("one merge round (touched plan)", touched)])
-        edges_hb.unpersist()
+
+    hb_prep = g1.edges.select("src", "dst")
+    pstate = _packed_init(g1, LOG2M).localCheckpoint(eager=True)
+    pedges = co_partitioned(hb_prep, "dst")
+    pmax = [F.expr(f"max({_field('packed', j)})").alias(f"_f{j}") for j in range(K)]
+    pmsgs = (
+        pedges.join(pstate.withColumnRenamed("id", "dst").hint("shuffle_hash"), "dst")
+        .groupBy(F.col("src").alias("id"), "slot").agg(*pmax)
+        .selectExpr("id", "slot", f"{_repack([f'_f{j}' for j in range(K)])} AS mpacked")
+    )
+    pmerged = pstate.join(pmsgs.hint("shuffle_hash"), ["id", "slot"], "full").selectExpr(
+        "id", "slot", "coalesce(packed, CAST(0 AS BIGINT)) AS old_packed",
+        f"{_greatest_packed('coalesce(packed, CAST(0 AS BIGINT))', 'coalesce(mpacked, CAST(0 AS BIGINT))')} AS packed")
+    emit("hyperball_t2_g1", [
+        ("edge prep (no distinct: max-merge idempotent)", hb_prep),
+        ("one packed merge round (O(1) plan width)", pmerged),
+    ])
+    pedges.unpersist()
 
     # ---- one-shot queries ----
     emit("triangles_g2", [("triangle_edges sum", __import__("webgraph_big_spark.algorithms.triangles", fromlist=["triangle_edges"]).triangle_edges(g2).agg(F.sum("tri")))])
@@ -272,15 +243,17 @@ if __name__ == "__main__":
 
 
 def extra_cent() -> None:
-    """hyperball_cent_g1: column-engine round (before) vs packed-engine
-    merge + per-node estimate (after).  Invoked via `python
-    tools/plans_r06.py {before|after} hyperball_cent_g1` — appended
-    separately because the main() sections predate the packed port."""
+    """hyperball_cent_g1: one packed-engine merge round + the per-node
+    estimate.  Invoked via `python tools/plans_r06.py {before|after}
+    hyperball_cent_g1` — appended separately because the main()
+    sections predate the packed engine."""
     import os
     os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from pyspark.sql import functions as F
-    import importlib
     import __spark_entry__ as entry
+    from webgraph_big_spark.algorithms.hyperball import (
+        K, LOG2M, _field, _greatest_packed, _node_est, _packed_init, _repack,
+    )
     from webgraph_big_spark.session import get_spark
     from webgraph_big_spark.graph import co_partitioned
     from webgraph_big_spark.transforms import BidirectionalGraph
@@ -290,43 +263,22 @@ def extra_cent() -> None:
     g1 = entry.load_g1(spark, sf)
     g1.edges = g1.edges.localCheckpoint(eager=True)
     gt = BidirectionalGraph(g1).backward
-    if TAG == "before":
-        hb = importlib.import_module("webgraph_big_spark.algorithms.hyperball")
-        c = hb._cfg(hb.LOG2M)
-        state = hb._with_est(hb._init_state(gt, hb.LOG2M), c).localCheckpoint(eager=True)
-        edges = co_partitioned(gt.edges.select("src", "dst"), "dst")
-        changed = state.select("id")
-        msgs = (
-            edges.join(changed.withColumnRenamed("id", "dst").hint("shuffle_hash"), "dst")
-            .join(state.selectExpr("id AS dst", *c.rcols).hint("shuffle_hash"), "dst")
-            .selectExpr("src AS id", *c.rcols)
-        )
-        gathered = msgs.groupBy("id").agg(*[F.expr(f"max(r{k})").alias(f"m{k}") for k in range(c.p)])
-        old_named = state.selectExpr("id", *[f"r{k} AS o{k}" for k in range(c.p)], "est AS old_est")
-        chg = hb._balanced_expr([f"coalesce(m{k}, 0) > o{k}" for k in range(c.p)], "OR")
-        merged = [f"greatest(o{k}, coalesce(m{k}, 0)) AS r{k}" for k in range(c.p)]
-        touched = old_named.join(gathered.hint("shuffle_hash"), "id", "left").selectExpr(
-            "id", *merged, "old_est", f"({chg}) AS _chg")
-        touched = hb._with_est(touched, c)
-        emit("hyperball_cent_g1", [("one column-engine round (m-wide plan)", touched)])
-    else:
-        hp = importlib.import_module("webgraph_big_spark.algorithms.hyperball_packed")
-        state = hp._packed_init(gt, 6).localCheckpoint(eager=True)
-        edges = co_partitioned(gt.edges.select("src", "dst"), "dst")
-        max_aggs = [F.expr(f"max({hp._field('packed', j)})").alias(f"_f{j}") for j in range(hp.K)]
-        msgs = (
-            edges.join(state.withColumnRenamed("id", "dst").hint("shuffle_hash"), "dst")
-            .groupBy(F.col("src").alias("id"), "slot").agg(*max_aggs)
-            .selectExpr("id", "slot", f"{hp._repack([f'_f{j}' for j in range(hp.K)])} AS mpacked")
-        )
-        merged = state.join(msgs.hint("shuffle_hash"), ["id", "slot"], "full").selectExpr(
-            "id", "slot", "coalesce(packed, CAST(0 AS BIGINT)) AS old_packed",
-            f"{hp._greatest_packed('coalesce(packed, CAST(0 AS BIGINT))', 'coalesce(mpacked, CAST(0 AS BIGINT))')} AS packed")
-        est = hp._node_est(state, 6)
-        emit("hyperball_cent_g1", [
-            ("one packed-engine merge round (O(1) plan width)", merged),
-            ("per-node estimate (per-slot partials + slot-order combine)", est),
-        ])
+    state = _packed_init(gt, LOG2M).localCheckpoint(eager=True)
+    edges = co_partitioned(gt.edges.select("src", "dst"), "dst")
+    max_aggs = [F.expr(f"max({_field('packed', j)})").alias(f"_f{j}") for j in range(K)]
+    msgs = (
+        edges.join(state.withColumnRenamed("id", "dst").hint("shuffle_hash"), "dst")
+        .groupBy(F.col("src").alias("id"), "slot").agg(*max_aggs)
+        .selectExpr("id", "slot", f"{_repack([f'_f{j}' for j in range(K)])} AS mpacked")
+    )
+    merged = state.join(msgs.hint("shuffle_hash"), ["id", "slot"], "full").selectExpr(
+        "id", "slot", "coalesce(packed, CAST(0 AS BIGINT)) AS old_packed",
+        f"{_greatest_packed('coalesce(packed, CAST(0 AS BIGINT))', 'coalesce(mpacked, CAST(0 AS BIGINT))')} AS packed")
+    est = _node_est(state, LOG2M)
+    emit("hyperball_cent_g1", [
+        ("one packed-engine merge round (O(1) plan width)", merged),
+        ("per-node estimate (per-slot partials + slot-order combine)", est),
+    ])
 
 
 if __name__ == "__main__" and "hyperball_cent_g1" in ONLY:

@@ -50,11 +50,12 @@ def get_spark(
         # coalesce under the default 1 MB minPartitionSize floor; an A/B
         # on scc_fwbw showed ~30% loss with bytes-first coalescing.
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Catalyst constraint propagation is O(expressions²) during
-        # optimization; the wide-register HyperBall plans (hundreds of
-        # expressions) pay seconds of pure driver time per round for an
-        # inference pass that never helps these join shapes (measured
-        # ~10-15% on hyperball_centralities at sf0.1).  Purely an
+        # Catalyst constraint propagation (inferring IsNotNull/equality
+        # constraints through every plan node) costs optimizer time on
+        # every query: with it on, the linkbench ``ingest`` pass
+        # (build_graph, store/load, simplify, triangles, streaming
+        # batches) used ~8% more CPU (median of 7 interleaved pairs on a
+        # 4-vCPU VM, 5 of 7 worse; ``rounds`` flat).  Purely an
         # optimizer-cost knob — plans stay semantically identical.
         .config("spark.sql.constraintPropagation.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
