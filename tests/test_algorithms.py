@@ -122,12 +122,32 @@ def test_node_triangles_sum(spark):
     assert total == 3 * triangles_oracle(edges, n)
 
 
-@pytest.mark.parametrize("fam", ["er", "tree_out", "two_comp"])
+# a directed 30-cycle: 15 undirected / 29 forward levels, so the frontier
+# loop's periodic truncation of the visited set runs
+BFS_FAMILIES = {**FAMILIES, "cycle30": (synth.cycle(30), 30)}
+
+
+@pytest.mark.parametrize("fam", ["er", "tree_out", "two_comp", "cycle30"])
 def test_bfs_families(spark, fam):
-    edges, n = FAMILIES[fam]
-    got = {r["id"]: r["dist"] for r in bfs_distances(_g(spark, edges, n), [0]).collect()}
+    edges, n = BFS_FAMILIES[fam]
+    g = _g(spark, edges, n)
+    got = {r["id"]: r["dist"] for r in bfs_distances(g, [0]).collect()}
     want = bfs_oracle(edges, n, [0])
     assert got == want, fam
+    # parents: min-id neighbour one level closer (sources point at themselves)
+    nbrs = {}
+    for s, d in edges:
+        nbrs.setdefault(int(d), set()).add(int(s))
+        nbrs.setdefault(int(s), set()).add(int(d))
+    want_parent = {
+        x: x if k == 0 else min(y for y in nbrs[x] if want.get(y) == k - 1)
+        for x, k in want.items()
+    }
+    got_tree = {r["id"]: (r["dist"], r["parent"]) for r in bfs_distances(g, [0], parents=True).collect()}
+    assert got_tree == {x: (want[x], want_parent[x]) for x in want}, fam
+    # symmetric=True expands arcs forward only: the directed BFS
+    fwd = {r["id"]: r["dist"] for r in bfs_distances(g, [0], symmetric=True).collect()}
+    assert fwd == bfs_oracle(edges, n, [0], symmetric_expand=False), fam
 
 
 def test_degree_histogram_and_stats(spark):

@@ -88,8 +88,8 @@ def test_checkpoint_manifest_partition_metrics(spark, tmp_path):
             manifests.append(json.load(open(p)))
     assert manifests, "no checkpoints written"
     for man in manifests:
-        assert man["rows"] == 30
-        assert sum(man["partition_sizes"]) == 30
+        assert man["relations"]["state"]["rows"] == 30
+        assert sum(man["relations"]["state"]["partition_sizes"]) == 30
 
 
 def test_skew_hub_detection_and_salted_sum(spark):

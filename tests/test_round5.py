@@ -9,12 +9,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from webgraph_big_spark import checkpoint
 from webgraph_big_spark.graph import Graph
 from webgraph_big_spark.algorithms.components import sort_by_size
-from webgraph_big_spark.algorithms.scc import (
-    _fwbw_latest,
-    strongly_connected_components_fwbw,
-)
+from webgraph_big_spark.algorithms.scc import strongly_connected_components_fwbw
 
 
 def _g(spark, edges):
@@ -31,7 +29,7 @@ CHAINED_CYCLES = [(10, 11), (11, 10), (0, 1), (1, 0), (11, 0)]
 CHAINED_EXPECTED = {10: 10, 11: 10, 0: 0, 1: 0}
 
 
-def test_fwbw_checkpoint_roundtrip(spark, tmp_path):
+def test_fwbw_run_dir_roundtrip(spark, tmp_path):
     """A run with run_dir produces the same labelling as without, and
     leaves a complete (manifest-committed) checkpoint behind."""
     run_dir = str(tmp_path / "scc_run")
@@ -43,7 +41,7 @@ def test_fwbw_checkpoint_roundtrip(spark, tmp_path):
         ).collect()
     }
     assert got == CHAINED_EXPECTED
-    assert _fwbw_latest(run_dir) is not None
+    assert checkpoint.latest(run_dir) is not None
 
 
 def test_fwbw_resumes_from_interrupted_run(spark, tmp_path):
@@ -56,7 +54,7 @@ def test_fwbw_resumes_from_interrupted_run(spark, tmp_path):
         strongly_connected_components_fwbw(
             g, giant_pivots=0, max_outer=1, run_dir=run_dir
         )
-    assert _fwbw_latest(run_dir) == 0  # round 0 committed before the kill
+    assert checkpoint.latest(run_dir) == 0  # round 0 committed before the kill
     phases = []
     got = {
         r["id"]: r["comp"]

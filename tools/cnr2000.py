@@ -33,7 +33,9 @@ function of cnr-2000 that the reference embeds in
 diameter at alpha=.9 within ±1 of the true value; that test runs
 HyperBall at log2m=8, so pass ``--hb-log2m 8`` to reproduce it);
 --scc-run-dir makes the FW-BW outer loop durably checkpointed/resumable,
-so a host-window kill costs at most one outer round)
+so a host-window kill costs at most one outer round; the directory holds
+iter_NNNNNN/{done,nodes,edges} per committed round, and directories in the
+older outer_NNNNN layout are not resumed from)
 """
 
 from __future__ import annotations

@@ -1,9 +1,13 @@
-"""Breadth-first distances — the frontier loop.
+"""Breadth-first distances on the shared frontier loop.
 
 Analogue of ``ParallelBreadthFirstVisit`` (``algo/ParallelBreadthFirstVisit.java:79``):
 its shared queue + CAS ``marker`` array + per-level CyclicBarrier map to a
 ``visited`` state DataFrame, a ``frontier`` DataFrame and one Spark job
-per level (SURVEY.md §3.3).  ``visit_all`` reproduces ``visitAll()``
+per level (SURVEY.md §3.3) — :func:`webgraph_big_spark.checkpoint.frontier_loop`,
+which SCC's reachability phases run on too.  ``bfs_distances`` supplies
+only the level's expansion: one join of the frontier against the edge
+table pinned by ``src`` (released in a ``finally``), deduplicated by
+target id (min-id parent when ``parents=True``).  ``visit_all`` reproduces ``visitAll()``
 (``:272``): restart from the smallest unvisited node until every node is
 reached; the per-node "round" is the BFS index — which is exactly how the
 reference derives WCC (``algo/ConnectedComponents.java:107``).
@@ -13,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from webgraph_big_spark.checkpoint import frontier_loop
 from webgraph_big_spark.graph import Graph, co_partitioned
 
 
@@ -47,10 +52,6 @@ def bfs_distances(
         arc_view = g.edges.select("src", "dst").union(
             g.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-    # hash-partitioned by the expansion key and pinned: per level only
-    # the frontier moves (see co_partitioned for the full recipe)
-    edges = co_partitioned(arc_view, "src")
-
     if isinstance(sources, DataFrame):
         src_df = sources.select(F.col("id").cast("long"))
     else:
@@ -59,45 +60,32 @@ def bfs_distances(
     first_cols = ["id", F.lit(0).alias("dist")] + (
         [F.col("id").alias("parent")] if parents else []
     )
-    visited = src_df.select(*first_cols).localCheckpoint(eager=True)
-    frontier = visited
-    depth = 0
-    limit = fixed_rounds if fixed_rounds is not None else max_depth
-    while depth < limit:
-        depth += 1
+
+    def expand(frontier: DataFrame, depth: int) -> DataFrame:
         # shuffle_hash on the stats-less frontier — without it Catalyst
         # plans SMJ and re-Exchanges the cached edge table every level
-        expand = edges.join(
+        arcs = edges.join(
             frontier.select(F.col("id").alias("src")).hint("shuffle_hash"), "src"
         )
+        # dedup by id here, so the loop's anti join finds the candidates
+        # already hash-partitioned by id
         if parents:
-            nxt_base = expand.groupBy(F.col("dst").alias("id")).agg(
-                F.min("src").alias("parent")
-            )
+            nxt = arcs.groupBy(F.col("dst").alias("id")).agg(F.min("src").alias("parent"))
         else:
-            nxt_base = expand.select(F.col("dst").alias("id")).distinct()
-        # shuffle_hash on the visited side: nxt_base is already hash-
-        # partitioned by id (distinct/groupBy above), so the anti join
-        # exchanges only the visited set and skips the two sorts an SMJ
-        # would add per level
-        nxt = (
-            nxt_base.join(visited.select("id").hint("shuffle_hash"), "id", "left_anti")
-            .select(
-                "id",
-                F.lit(depth).alias("dist"),
-                *(["parent"] if parents else []),
-            )
-            .localCheckpoint(eager=True)  # truncate per-level lineage
+            nxt = arcs.select(F.col("dst").alias("id")).distinct()
+        return nxt.select("id", F.lit(depth).alias("dist"), *(["parent"] if parents else []))
+
+    # hash-partitioned by the expansion key and pinned: per level only
+    # the frontier moves (see co_partitioned for the full recipe)
+    edges = co_partitioned(arc_view, "src")
+    try:
+        return frontier_loop(
+            src_df.select(*first_cols),
+            expand,
+            max_depth=fixed_rounds if fixed_rounds is not None else max_depth,
         )
-        if nxt.isEmpty():
-            break
-        visited = visited.union(nxt)
-        frontier = nxt
-        # the union chain itself grows linearly; re-materialize periodically
-        if depth % 10 == 0:
-            visited = visited.localCheckpoint(eager=True)
-    edges.unpersist()
-    return visited
+    finally:
+        edges.unpersist()
 
 
 def visit_all(

@@ -111,7 +111,6 @@ def connected_components(
 def connected_components_star(
     g: Graph,
     max_iterations: int = 64,
-    run_dir: str | None = None,
 ) -> DataFrame:
     """Large-star / small-star CC (Kiveris et al., the 'Stergiou-style'
     O(log n)-round family named by the north rule).

@@ -18,14 +18,13 @@ quotient DAG.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import time
+from concurrent.futures import ThreadPoolExecutor
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
+from webgraph_big_spark import checkpoint
 from webgraph_big_spark.graph import Graph, co_partitioned
+from webgraph_big_spark.session import broadcast_threshold
 
 
 def bounded_closure(g: Graph, t: int) -> DataFrame:
@@ -67,56 +66,22 @@ def strongly_connected_components(g: Graph, t: int = 32) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _reach(
-    edges: DataFrame, seeds: DataFrame, forward: bool = True, pinned: DataFrame | None = None
-) -> DataFrame:
-    """Frontier-loop reachability: ids reachable from ``seeds(id)`` along
-    ``edges`` (or against them when ``forward=False``).  O(diameter)
-    rounds, O(|reached|) state — never materializes pairs.
-
-    ``pinned`` (optional): the edge table already hash-partitioned +
-    cached by the expansion key (``src`` forward / ``dst`` backward) —
-    callers running several reaches over the SAME edge set (FW-BW does
-    forward + backward per pivot) pin once per outer round and pass it
-    in; this function then never repartitions and never unpersists.
-    When omitted, pins locally and releases in a ``finally``.
-    """
+def _reach(pinned: DataFrame, seeds: DataFrame, forward: bool = True) -> DataFrame:
+    """Ids reachable from ``seeds(id)`` along the edges (against them
+    when ``forward=False``): O(diameter) rounds, O(|reached|) state.
+    ``pinned`` is the edge table hash-partitioned + cached by the
+    expansion key (``src`` forward / ``dst`` backward); the caller owns
+    it."""
     s, d = ("src", "dst") if forward else ("dst", "src")
-    owns_pin = pinned is None
-    if owns_pin:
-        # pin the edge table hash-partitioned by the expansion key for
-        # the loop's lifetime: per round only the frontier moves
-        pinned = co_partitioned(edges, s)
-    visited = seeds.select("id").distinct().localCheckpoint(eager=True)
-    frontier = visited
-    depth = 0
-    try:
-        while True:
-            depth += 1
-            # shuffle_hash on the visited side: the candidate set is
-            # already hash-partitioned by id after the distinct, so the
-            # anti join exchanges only `visited` and skips SMJ sorts
-            nxt = (
-                pinned.join(
-                    frontier.withColumnRenamed("id", s).hint("shuffle_hash"), s
-                )
-                .select(F.col(d).alias("id"))
-                .distinct()
-                .join(visited.hint("shuffle_hash"), "id", "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            if nxt.isEmpty():
-                return visited
-            # lazy union of checkpointed levels — re-materializing the
-            # whole visited set every level was one extra O(|reached|)
-            # job per level; truncate the chain periodically instead
-            visited = visited.union(nxt)
-            if depth % 8 == 0:
-                visited = visited.localCheckpoint(eager=True)
-            frontier = nxt
-    finally:
-        if owns_pin:
-            pinned.unpersist()
+
+    def expand(frontier: DataFrame, depth: int) -> DataFrame:
+        return (
+            pinned.join(frontier.withColumnRenamed("id", s).hint("shuffle_hash"), s)
+            .select(F.col(d).alias("id"))
+            .distinct()
+        )
+
+    return checkpoint.frontier_loop(seeds.select("id").distinct(), expand)
 
 
 def _peel_trivial(
@@ -142,7 +107,7 @@ def _peel_trivial(
     (``broadcast_core``) — the edge table then never shuffles during
     peeling."""
     prev_core_cnt = None
-    core = None
+    core = nodes  # zero rounds peel nothing
     for _ in range(max_rounds):
         core = (
             edges.select(F.col("src").alias("id"), F.lit(1).alias("_o"), F.lit(0).alias("_i"))
@@ -170,64 +135,12 @@ def _peel_trivial(
     return edges, core, peeled
 
 
-def _fwbw_checkpoint(
-    run_dir: str, outer: int, done: DataFrame, nodes: DataFrame, edges: DataFrame,
-    keep_last: int = 3,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Durably checkpoint the FW-BW outer-loop state (manifest written
-    LAST, so its presence proves a complete round — same commit protocol
-    as :class:`webgraph_big_spark.checkpoint.IterativeRunner`).  Returns
-    the three relations re-read from parquet (lineage fully truncated;
-    the checkpoint is now the source of truth for resume)."""
-    spark = done.sparkSession
-    d = os.path.join(run_dir, f"outer_{outer:05d}")
-    out = {}
-    for name, df in (("done", done), ("nodes", nodes), ("edges", edges)):
-        path = os.path.join(d, name)
-        df.write.mode("overwrite").parquet(path)
-        out[name] = spark.read.parquet(path)
-    manifest = {
-        "outer": outer,
-        "done_rows": out["done"].count(),
-        "nodes_rows": out["nodes"].count(),
-        "edges_rows": out["edges"].count(),
-        "ts": time.time(),
-    }
-    tmp = os.path.join(d, "manifest.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp, os.path.join(d, "manifest.json"))  # commit point
-    # prune superseded rounds, keeping the last few complete ones
-    complete = sorted(
-        int(n.split("_")[1])
-        for n in os.listdir(run_dir)
-        if n.startswith("outer_")
-        and os.path.exists(os.path.join(run_dir, n, "manifest.json"))
-    )
-    for old in complete[:-keep_last]:
-        shutil.rmtree(os.path.join(run_dir, f"outer_{old:05d}"), ignore_errors=True)
-    return out["done"], out["nodes"], out["edges"]
-
-
-def _fwbw_latest(run_dir: str) -> int | None:
-    if not os.path.isdir(run_dir):
-        return None
-    its = [
-        int(n.split("_")[1])
-        for n in os.listdir(run_dir)
-        if n.startswith("outer_")
-        and os.path.exists(os.path.join(run_dir, n, "manifest.json"))
-    ]
-    return max(its) if its else None
-
-
 def strongly_connected_components_fwbw(
     g: Graph,
     max_outer: int = 64,
     giant_pivots: int = 1,
     progress=None,
     run_dir: str | None = None,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """(id, comp) with comp = min id of the SCC — the linear-state scale
     path (vs :func:`strongly_connected_components`'s pair-materializing
@@ -246,7 +159,9 @@ def strongly_connected_components_fwbw(
        its color class* yields every root's SCC simultaneously; assign,
        remove, repeat.  Many SCCs resolve per outer round.
 
-    All phases are frontier loops: state never exceeds O(n) rows.
+    All phases are frontier loops: state never exceeds O(n) rows.  The
+    reaches and the color-class member search run on
+    :func:`webgraph_big_spark.checkpoint.frontier_loop`.
 
     The loop runs until every node is assigned (each coloring round
     resolves at least the color roots' SCCs, so outer rounds are bounded
@@ -258,31 +173,32 @@ def strongly_connected_components_fwbw(
     phase transition — long-running full-graph runs are otherwise opaque
     from outside the Spark UI.
 
-    ``run_dir`` (optional): durable resumability.  Every
-    ``checkpoint_every`` outer rounds the loop state (``done``/``nodes``/
-    ``edges``) is written to parquet with a commit-last manifest; a new
-    call with the same ``run_dir`` resumes from the latest complete
-    round instead of restarting (a host-killed multi-hour run loses at
-    most ``checkpoint_every`` rounds).  Pass a fresh/empty directory for
-    a fresh run.
+    ``run_dir`` (optional): durable resumability.  After every outer
+    round the loop state is committed
+    (:func:`webgraph_big_spark.checkpoint.commit`) as
+    ``run_dir/iter_NNNNNN/{done,nodes,edges}``, NNNNNN = the outer
+    round; a new call with the same ``run_dir`` resumes from the newest
+    complete round (a host-killed run loses at most one round).  Pass a
+    fresh/empty directory for a fresh run.
 
     The edge table is pinned hash-partitioned ONCE per outer round in
-    each direction (``src`` for forward/coloring, ``dst`` for backward)
-    and shared by every phase in that round — the per-phase repartition+
-    cache+count that round 4 paid (twice per pivot, once per coloring
-    phase) is gone; pins are released in ``finally`` even on error.
+    each direction (``src`` for forward/coloring, ``dst`` for backward),
+    shared by every phase in that round and released in ``finally``.
+    One 2-worker pool per outer round builds both pins and runs the
+    pivot's forward and backward reaches side by side, so one job's
+    per-level driver latency backfills the other's.
     """
     say = progress or (lambda msg: None)
     spark = g.edges.sparkSession
     outer = -1
-    latest = _fwbw_latest(run_dir) if run_dir else None
-    if latest is not None:
-        say(f"resuming from checkpointed outer round {latest}")
-        d = os.path.join(run_dir, f"outer_{latest:05d}")
-        done = spark.read.parquet(os.path.join(d, "done")).localCheckpoint(eager=True)
-        nodes = spark.read.parquet(os.path.join(d, "nodes")).localCheckpoint(eager=True)
-        edges = spark.read.parquet(os.path.join(d, "edges")).localCheckpoint(eager=True)
-        outer = latest
+    last = checkpoint.latest(run_dir) if run_dir else None
+    if last is not None:
+        say(f"resuming from checkpointed outer round {last}")
+        done, nodes, edges = (
+            df.localCheckpoint(eager=True)
+            for df in checkpoint.load(run_dir, last, ["done", "nodes", "edges"])
+        )
+        outer = last
         if nodes.isEmpty():
             return done
     else:
@@ -299,17 +215,7 @@ def strongly_connected_components_fwbw(
     # core set is ≤ |nodes| ids; broadcast it (edge table never shuffles
     # while peeling) exactly when it fits the session's broadcast
     # threshold — the same rule pagerank applies to its rank side
-    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    digits = "".join(ch for ch in str(raw) if ch.isdigit() or ch == "-")
-    bcast_bytes = int(digits) if digits else 10485760
-    if str(raw).lower().rstrip("b").endswith("m"):
-        bcast_bytes *= 1 << 20
-    elif str(raw).lower().rstrip("b").endswith("k"):
-        bcast_bytes *= 1 << 10
-    elif str(raw).lower().rstrip("b").endswith("g"):
-        bcast_bytes *= 1 << 30
-    n_nodes0 = nodes.count()
-    bcast_core = 0 < n_nodes0 * 32 <= bcast_bytes
+    bcast_core = 0 < nodes.count() * 32 <= broadcast_threshold(spark)
 
     while True:
         outer += 1
@@ -326,118 +232,34 @@ def strongly_connected_components_fwbw(
                 "(bounded by the number of SCCs in the worst case)"
             )
 
-        # ONE pin per direction per outer round, shared by all phases;
-        # the two repartition+cache+count materializations are
-        # independent — overlap them (guide §2.6)
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        with _TPE(max_workers=2) as _pool:
-            _fwd_f = _pool.submit(co_partitioned, edges, "src")
-            _bwd_f = _pool.submit(co_partitioned, edges, "dst")
-            fwd, bwd = _fwd_f.result(), _bwd_f.result()
-        try:
-            if outer < giant_pivots:
-                # FW-BW from the deterministic pivot (min id) — catches
-                # the giant SCC in O(diam) rounds without touching the
-                # rest.
-                pivot = nodes.agg(F.min("id")).first()[0]
-                say(f"outer {outer}: FW-BW pivot {pivot}")
-                seed = spark.createDataFrame([(int(pivot),)], "id long")
-                # forward and backward reachability are independent jobs
-                # over different pins — overlap them (guide §2.6) so one
-                # reach's per-level driver latency backfills the other's
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    fw_f = pool.submit(_reach, edges, seed, True, fwd)
-                    bw_f = pool.submit(_reach, edges, seed, False, bwd)
-                    fw, bw = fw_f.result(), bw_f.result()
-                scc = fw.join(bw, "id").localCheckpoint(eager=True)
-                comp = scc.agg(F.min("id")).first()[0]
-                done = done.union(scc.select("id", F.lit(int(comp)).alias("comp")))
-                assigned_ids = scc
-            else:
-                # coloring phase: forward max-propagation to fixpoint —
-                # only color rows move against the pinned edge side
-                say(f"outer {outer}: coloring")
-                color = nodes.select("id", F.col("id").alias("color")).localCheckpoint(
-                    eager=True
-                )
-                while True:
-                    msgs = (
-                        fwd.join(
-                            color.select(F.col("id").alias("src"), "color").hint(
-                                "shuffle_hash"
-                            ),
-                            "src",
-                        )
-                        .groupBy(F.col("dst").alias("id"))
-                        .agg(F.max("color").alias("mx"))
-                    )
-                    # change detection rides in the same plan (a color
-                    # changed ⇔ an incoming max exceeded it) — the old
-                    # separate new-vs-old join was a full SMJ per round
-                    new_color = (
-                        color.join(msgs.hint("shuffle_hash"), "id", "left")
-                        .select(
-                            "id",
-                            F.greatest("color", F.coalesce("mx", "color")).alias("color"),
-                            (F.coalesce("mx", "color") > F.col("color")).alias("_chg"),
-                        )
-                        .localCheckpoint(eager=True)
-                    )
-                    n_changed = new_color.filter(F.col("_chg")).count()
-                    color = new_color.select("id", "color")
-                    if n_changed == 0:
-                        break
-                # multi-source backward reach from every color root,
-                # within its color class
-                roots = color.filter(F.col("id") == F.col("color")).select("id", "color")
-                member = roots.localCheckpoint(eager=True)
-                frontier = member
-                bdepth = 0
-                while True:
-                    bdepth += 1
-                    nxt = (
-                        bwd.join(
-                            frontier.select(F.col("id").alias("dst"), "color").hint(
-                                "shuffle_hash"
-                            ),
-                            "dst",
-                        )
-                        .select(F.col("src").alias("id"), "color")
-                        .distinct()
-                        .join(
-                            color.withColumnRenamed("color", "c2").hint("shuffle_hash"),
-                            "id",
-                        )
-                        .filter(F.col("color") == F.col("c2"))
-                        .select("id", "color")
-                        .join(member.select("id").hint("shuffle_hash"), "id", "left_anti")
-                        .localCheckpoint(eager=True)
-                    )
-                    if nxt.isEmpty():
-                        break
-                    # lazy union of checkpointed levels (cf. _reach): the
-                    # full-member re-materialization per level was an
-                    # extra O(|member|) job each round
-                    member = member.union(nxt)
-                    if bdepth % 8 == 0:
-                        member = member.localCheckpoint(eager=True)
-                    frontier = nxt
-                # comp label = min id within each discovered SCC
-                say(f"outer {outer}: assigning color-root SCCs")
-                comp_of = member.groupBy("color").agg(F.min("id").alias("comp"))
-                assigned = (
-                    member.join(comp_of, "color")
-                    .select("id", "comp")
-                    .localCheckpoint(eager=True)
-                )
-                done = done.union(assigned)
-                assigned_ids = assigned.select("id")
-        finally:
-            fwd.unpersist()
-            bwd.unpersist()
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            pins = [pool.submit(co_partitioned, edges, key) for key in ("src", "dst")]
+            try:
+                fwd, bwd = (f.result() for f in pins)
+                if outer < giant_pivots:
+                    # FW-BW from the deterministic pivot (min id) —
+                    # catches the giant SCC in O(diam) rounds without
+                    # touching the rest.
+                    pivot = nodes.agg(F.min("id")).first()[0]
+                    say(f"outer {outer}: FW-BW pivot {pivot}")
+                    seed = spark.createDataFrame([(int(pivot),)], "id long")
+                    fw_f = pool.submit(_reach, fwd, seed, True)
+                    bw_f = pool.submit(_reach, bwd, seed, False)
+                    scc = fw_f.result().join(bw_f.result(), "id").localCheckpoint(eager=True)
+                    comp = scc.agg(F.min("id")).first()[0]
+                    done = done.union(scc.select("id", F.lit(int(comp)).alias("comp")))
+                    assigned_ids = scc
+                else:
+                    say(f"outer {outer}: coloring")
+                    assigned = _color_round(fwd, bwd, nodes)
+                    say(f"outer {outer}: assigning color-root SCCs")
+                    done = done.union(assigned)
+                    assigned_ids = assigned.select("id")
+            finally:
+                # release every pin that was built, even if the other failed
+                for f in pins:
+                    if f.exception() is None:
+                        f.result().unpersist()
 
         nodes = nodes.join(assigned_ids, "id", "left_anti").localCheckpoint(eager=True)
         done = done.localCheckpoint(eager=True)
@@ -449,7 +271,9 @@ def strongly_connected_components_fwbw(
             # when nodes is empty; edges are never consulted)
             if run_dir:
                 empty_edges = spark.createDataFrame([], "src long, dst long")
-                _fwbw_checkpoint(run_dir, outer, done, nodes, empty_edges)
+                checkpoint.commit(
+                    run_dir, outer, {"done": done, "nodes": nodes, "edges": empty_edges}
+                )
             break
         edges = (
             edges.join(
@@ -458,9 +282,64 @@ def strongly_connected_components_fwbw(
             .join(assigned_ids.select(F.col("id").alias("dst")), "dst", "left_anti")
             .localCheckpoint(eager=True)
         )
-        if run_dir and ((outer + 1) % checkpoint_every == 0):
-            done, nodes, edges = _fwbw_checkpoint(run_dir, outer, done, nodes, edges)
+        if run_dir:
+            done, nodes, edges = checkpoint.commit(
+                run_dir, outer, {"done": done, "nodes": nodes, "edges": edges}
+            )
     return done
+
+
+def _color_round(fwd: DataFrame, bwd: DataFrame, nodes: DataFrame) -> DataFrame:
+    """(id, comp) for every color root's SCC: forward max-propagation of
+    ``color`` to fixpoint over the ``src``-pinned edges, then a backward
+    reach from every root within its color class over the ``dst``-pinned
+    edges; comp = min id of each class's reached set."""
+    # only color rows move against the pinned edge side
+    color = nodes.select("id", F.col("id").alias("color")).localCheckpoint(eager=True)
+    while True:
+        msgs = (
+            fwd.join(
+                color.select(F.col("id").alias("src"), "color").hint("shuffle_hash"),
+                "src",
+            )
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.max("color").alias("mx"))
+        )
+        # change detection rides in the same plan (a color changed ⇔ an
+        # incoming max exceeded it) — the old separate new-vs-old join
+        # was a full SMJ per round
+        new_color = (
+            color.join(msgs.hint("shuffle_hash"), "id", "left")
+            .select(
+                "id",
+                F.greatest("color", F.coalesce("mx", "color")).alias("color"),
+                (F.coalesce("mx", "color") > F.col("color")).alias("_chg"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        n_changed = new_color.filter(F.col("_chg")).count()
+        color = new_color.select("id", "color")
+        if n_changed == 0:
+            break
+
+    def expand(frontier: DataFrame, depth: int) -> DataFrame:
+        return (
+            bwd.join(
+                frontier.select(F.col("id").alias("dst"), "color").hint("shuffle_hash"),
+                "dst",
+            )
+            .select(F.col("src").alias("id"), "color")
+            .distinct()
+            .join(color.withColumnRenamed("color", "c2").hint("shuffle_hash"), "id")
+            .filter(F.col("color") == F.col("c2"))
+            .select("id", "color")
+        )
+
+    # multi-source backward reach from every color root, within its class
+    roots = color.filter(F.col("id") == F.col("color")).select("id", "color")
+    member = checkpoint.frontier_loop(roots, expand)
+    comp_of = member.groupBy("color").agg(F.min("id").alias("comp"))
+    return member.join(comp_of, "color").select("id", "comp").localCheckpoint(eager=True)
 
 
 def scc_buckets(g: Graph, components: DataFrame) -> DataFrame:
@@ -491,15 +370,7 @@ def scc_buckets(g: Graph, components: DataFrame) -> DataFrame:
 def trim(g: Graph, rounds: int = 3) -> Graph:
     """Iteratively peel nodes with in- or out-degree 0 — they are
     singleton SCCs; the standard preprocessing that shrinks real graphs
-    drastically before closure/FW-BW."""
-    edges = g.edges.select("src", "dst")
-    for _ in range(rounds):
-        srcs = edges.select(F.col("src").alias("id")).distinct()
-        dsts = edges.select(F.col("dst").alias("id")).distinct()
-        core = srcs.join(dsts, "id", "inner")
-        edges = (
-            edges.join(core.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(core.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            .select("src", "dst")
-        )
+    drastically before closure/FW-BW.  At most ``rounds`` peel rounds
+    (fewer once a round removes nothing)."""
+    edges, _, _ = _peel_trivial(g.edges.select("src", "dst"), g.nodes(), max_rounds=rounds)
     return Graph(edges, dense=False)

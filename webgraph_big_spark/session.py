@@ -72,3 +72,9 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def broadcast_threshold(spark: SparkSession) -> int:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes,
+    parsed by Spark itself (any size suffix; -1 = broadcast disabled)."""
+    return spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
